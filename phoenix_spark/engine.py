@@ -109,7 +109,9 @@ class Engine:
         # Spark UDF registry the callables live in.
         self._functions: dict[str, tuple[str, str | None, int | None]] = {}
         self._registered: set[str] = set()
-        self._ts_cols: dict[str, set[str]] | None = None
+        # bare temp-view name -> (managed table, its segment list when the
+        # view was registered): the view pins those files (see _register)
+        self._registered_segments: dict[str, tuple[ManagedTable, list[str]]] = {}
         if sf_dir is not None:
             self.attach(sf_dir)
 
@@ -162,7 +164,6 @@ class Engine:
         """Point the engine at a data directory and register its tables."""
         self.catalog = Catalog(self.spark, sf_dir)
         self.catalog.register_all()
-        self._ts_cols = None
         return self
 
     def table(
@@ -288,7 +289,11 @@ class Engine:
         # connection registering its filtered frame here would leak its
         # scope into every other connection (TenantSpecificTablesDMLIT).
         bare = name.split(".")[-1]
-        owner = self._view_owners.get(self._qualify(name))
+        qname = self._qualify(name)
+        mt = ManagedTable(self.spark, self.warehouse, qname)
+        if mt.exists():
+            self._registered_segments[bare.lower()] = (mt, mt._segments())
+        owner = self._view_owners.get(qname)
         if owner is None:
             self._unscoped().table(name).createOrReplaceTempView(bare)
             self._registered.add(bare)
@@ -297,7 +302,6 @@ class Engine:
             # scoped frame (foreign connections are rejected before lookup)
             self.table(name).createOrReplaceTempView(bare)
             self._registered.add(bare)
-        self._ts_cols = None  # new schema may add date/timestamp columns
         # Views recompile their predicate over the CURRENT base state
         # (QueryCompiler.java:803-806) — but a Spark temp view pins the
         # segment list that existed when it was registered, so re-register
@@ -322,95 +326,70 @@ class Engine:
                 self.table(vname).createOrReplaceTempView(vname.split(".")[-1])
                 self._registered.add(vname.split(".")[-1])
 
-    def _ts_columns(self) -> dict[str, set[str]]:
-        """Per-table names of date/timestamp-typed columns across attached +
-        managed tables — catalog knowledge the sqlfront needs to rewrite
-        Phoenix ``date ± int`` (days) arithmetic (DateAddExpression
-        analogue)."""
-        if self._ts_cols is not None:
-            return self._ts_cols
-        from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
-
-        by_table: dict[str, set[str]] = {}
-        sources: list[tuple[str, DataFrame]] = []
-        if self.catalog is not None:
-            sources += [(n, self.catalog.df(n)) for n in self.catalog.tables]
-        for n in list(self._registered):
-            try:
-                sources.append((n, self.spark.table(n)))
-            except Exception:
-                # stale temp view (dropped by another connection): skip
-                self._registered.discard(n)
-        for name, df in sources:
-            by_table[name.split(".")[-1].lower()] = {
-                f.name
-                for f in df.schema.fields
-                if isinstance(f.dataType, (DateType, TimestampType, TimestampNTZType))
-            }
-        self._ts_cols = by_table
-        return by_table
-
-    def _ts_columns_for(self, text: str) -> set[str]:
-        """ts-typed column names scoped to the tables the statement actually
-        references — a same-named column that is numeric in the queried table
-        but a timestamp elsewhere must NOT trigger the date-arith rewrite."""
-        by_table = self._ts_columns()
+    def _refresh_compacted(self, text: str) -> None:
+        """Re-register every managed table the statement references (also
+        through a view) whose segment list changed since its temp view was
+        registered: ``ManagedTable.compact()`` and TRUNCATE delete the
+        segment files that view still reads."""
         tokens = {m.lower() for m in re.findall(r"[A-Za-z_]\w*", text)}
-        cols: set[str] = set()
-        for table, ts_cols in by_table.items():
-            if table in tokens:
-                cols |= ts_cols
-        return cols
-
-    def _typed_columns_for(self, text: str, types: tuple) -> set[str]:
-        """Column names of the given Spark types, scoped to the referenced
-        tables — catalog knowledge for type-sensitive dialect rewrites."""
-        tokens = {m.lower() for m in re.findall(r"[A-Za-z_]\w*", text)}
-        cols: set[str] = set()
-        sources: list[tuple[str, DataFrame]] = []
-        if self.catalog is not None:
-            sources += [(n, self.catalog.df(n)) for n in self.catalog.tables]
-        for n in list(self._registered):
-            try:
-                sources.append((n, self.spark.table(n)))
-            except Exception:
-                # stale temp view (dropped by another connection): skip
-                self._registered.discard(n)
-        for name, df in sources:
-            if name.split(".")[-1].lower() not in tokens:
+        for vname in self._views:
+            if vname.split(".")[-1] in tokens:
+                node = vname
+                while node in self._views:
+                    node = self._views[node][0]
+                tokens.add(node.split(".")[-1].lower())
+        for bare, (mt, segs) in list(self._registered_segments.items()):
+            if bare not in tokens:
                 continue
-            cols |= {
-                f.name
-                for f in df.schema.fields
-                if isinstance(f.dataType, types)
-            }
+            if not mt.exists():
+                del self._registered_segments[bare]
+            elif mt._segments() != segs:
+                self._register(mt.name)
+
+    def _typed_columns(self, text: str) -> dict[str, set[str]]:
+        """The typed column sets ``translate_phoenix_sql`` takes, from the
+        tables and views the statement references (a same-named column of
+        another type in an unreferenced table must not trigger a rewrite):
+
+        * ``ts_columns``: date/timestamp — Phoenix ``date ± int`` (days)
+          arithmetic (DateAddExpression);
+        * ``int_columns``: integral — truncating division
+          (LongDivideExpression; Spark's ``/`` returns a double);
+        * ``str_columns``: string — NULL-as-empty ``||``
+          (StringConcatExpression skips null children);
+        * ``float_columns``: FLOAT — comparison literals coerce to the
+          column type (NotQueryIT; sqlfront._rewrite_float_literal_cmp).
+
+        Schemas come from the temp views, which hold analyzed plans: no
+        footer read, and the schema is the one Catalyst resolves (a managed
+        table shadowing a catalog name wins).  Nothing is cached, so DDL is
+        seen by the very next statement."""
+        from pyspark.errors import AnalysisException
+        from pyspark.sql import types as T
+
+        kinds = {
+            "ts_columns": (T.DateType, T.TimestampType, T.TimestampNTZType),
+            "int_columns": (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
+            "str_columns": (T.StringType,),
+            "float_columns": (T.FloatType,),
+        }
+        cols: dict[str, set[str]] = {k: set() for k in kinds}
+        tokens = {m.lower() for m in re.findall(r"[A-Za-z_]\w*", text)}
+        names = set(self.catalog.tables) if self.catalog is not None else set()
+        for n in names | self._registered:
+            if n.lower() not in tokens:
+                continue
+            try:
+                fields = self.spark.table(n).schema.fields
+            except AnalysisException:
+                # stale temp view (dropped by another connection): skip
+                self._registered.discard(n)
+                continue
+            for f in fields:
+                for k, types in kinds.items():
+                    if isinstance(f.dataType, types):
+                        cols[k].add(f.name)
         return cols
-
-    def _int_columns_for(self, text: str) -> set[str]:
-        """Integral-typed columns — for the truncating-division rewrite
-        (LongDivideExpression: long/long division truncates in the
-        dialect, while Spark's / returns a double)."""
-        from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-        return self._typed_columns_for(
-            text, (ByteType, ShortType, IntegerType, LongType)
-        )
-
-    def _str_columns_for(self, text: str) -> set[str]:
-        """String-typed columns — for the NULL-as-empty concat rewrite
-        (StringConcatExpression skips null children; Spark concat
-        propagates NULL)."""
-        from pyspark.sql.types import StringType
-
-        return self._typed_columns_for(text, (StringType,))
-
-    def _float_columns_for(self, text: str) -> set[str]:
-        """FLOAT-typed columns — comparison literals coerce to the column
-        type in the dialect, so float comparisons run at float precision
-        (NotQueryIT; sqlfront._rewrite_float_literal_cmp)."""
-        from pyspark.sql.types import FloatType
-
-        return self._typed_columns_for(text, (FloatType,))
 
     # -- sequences (SequenceRegionObserver analogue) -----------------------
 
@@ -713,6 +692,7 @@ class Engine:
                 raise ValueError(f"Table undefined. tableName={vname}")
         if self._cdcs:
             self._register_cdc_views(text)
+        self._refresh_compacted(text)
         masked, unmask = self._mask_literals(text)
         masked = self._rewrite_qualified_refs(masked)
         # table-name qualifiers over an aliased table must resolve to the
@@ -737,13 +717,7 @@ class Engine:
         # predicate matching compares literal-containing conjuncts
         text = self._maybe_use_index(text)
         return self.spark.sql(
-            translate_phoenix_sql(
-                text,
-                ts_columns=self._ts_columns_for(text),
-                int_columns=self._int_columns_for(text),
-                str_columns=self._str_columns_for(text),
-                float_columns=self._float_columns_for(text),
-            )
+            translate_phoenix_sql(text, **self._typed_columns(text))
         )
 
     # SELECT DISTINCT ... GROUP BY g1,g2 ORDER BY g1,g2 where a sort key is
@@ -1155,13 +1129,7 @@ class Engine:
         )
         probe_sql = unmask(probe)
         pdf = self.spark.sql(
-            translate_phoenix_sql(
-                probe_sql,
-                ts_columns=self._ts_columns_for(probe_sql),
-                int_columns=self._int_columns_for(probe_sql),
-                str_columns=self._str_columns_for(probe_sql),
-                float_columns=self._float_columns_for(probe_sql),
-            )
+            translate_phoenix_sql(probe_sql, **self._typed_columns(probe_sql))
         )
         # per-partition row counts: one tiny aggregate (num-partitions rows)
         counts = sorted(
@@ -1909,7 +1877,6 @@ class Engine:
         ManagedTable(self.spark, self.warehouse, name).drop()
         self.spark.catalog.dropTempView(name)
         self._registered.discard(name)
-        self._ts_cols = None
 
     def _index_base(self, table: str):
         """Resolve an index's declared base to ``(ManagedTable, chain)``.
@@ -2032,7 +1999,7 @@ class Engine:
         ``table`` scopes the date-arith rewrite's ts-column set to the
         indexed base table."""
         ts = (
-            self._ts_columns().get(table.split(".")[-1].lower(), set())
+            self._typed_columns(table.split(".")[-1])["ts_columns"]
             if table
             else set()
         )
@@ -2079,9 +2046,8 @@ class Engine:
                 if sm.group(1):
                     return 0
                 raise ValueError(f"no schema {schema}")
-            for _root, _dirs, files in os.walk(path):
-                if "meta.json" in files:
-                    raise ValueError(f"schema {schema} is not empty")
+            if any(n.split(".")[0] == schema for n in self._managed_names()):
+                raise ValueError(f"schema {schema} is not empty")
             import shutil
 
             shutil.rmtree(path, ignore_errors=True)
@@ -2171,7 +2137,6 @@ class Engine:
             mt.drop()
             self.spark.catalog.dropTempView(dr.name)
             self._registered.discard(dr.name.split(".")[-1])
-            self._ts_cols = None
             for ix in dependent:
                 self._drop_index(ix)
         return 0
@@ -2352,10 +2317,7 @@ class Engine:
         names = set()
         if self.catalog is not None:
             names |= set(self.catalog.tables)
-        for root, _dirs, files in os.walk(self.warehouse):
-            if "meta.json" in files:
-                rel = os.path.relpath(root, self.warehouse)
-                names.add(rel.replace(os.sep, "."))
+        names |= set(self._managed_names())
         names |= set(self._views)
         return self.spark.createDataFrame(
             [(n,) for n in sorted(names)], "table_name: string"
@@ -2397,7 +2359,7 @@ class Engine:
             if self.catalog is None or name not in self.catalog.tables:
                 raise ValueError(f"no such table {name}")
             meta = self.catalog.tables[name]
-            schema = self.catalog.df(name).schema
+            schema = self.spark.table(name).schema
             pk, sort_orders, props = list(meta.pk), {}, {}
         hidden = props.get("HIDDEN_OVERFLOW") and "props"
         cols = ",\n  ".join(
@@ -2496,20 +2458,16 @@ class Engine:
             # update, PhoenixIndexBuilder ON DUPLICATE KEY) binds straight
             # to the bson.py compiler — its output is a Column, which
             # upsert_df accepts alongside SQL strings.
+            # dup-update expressions evaluate over the EXISTING row, so the
+            # catalog-typed dialect rewrites (|| NULL-skip, int division,
+            # date±int) apply exactly as in a SELECT over the same table
+            # (OnDuplicateKeyIT: counter1 = counter1 || ..., counter1 =
+            # counter1 + 1); the full statement text carries the table name
+            # _typed_columns scopes on
+            typed = self._typed_columns(text)
+
             def _tr(s: str) -> str:
-                # dup-update expressions evaluate over the EXISTING row, so
-                # the catalog-typed dialect rewrites (|| NULL-skip, int
-                # division, date±int) apply exactly as in a SELECT over the
-                # same table (OnDuplicateKeyIT: counter1 = counter1 || ...,
-                # counter1 = counter1 + 1); the full statement text carries
-                # the table name the _for helpers scope on
-                return translate_phoenix_sql(
-                    s,
-                    ts_columns=self._ts_columns_for(text),
-                    int_columns=self._int_columns_for(text),
-                    str_columns=self._str_columns_for(text),
-                    float_columns=self._float_columns_for(text),
-                )
+                return translate_phoenix_sql(s, **typed)
 
             def _dup_expr(e: str):
                 m = re.fullmatch(

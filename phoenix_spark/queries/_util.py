@@ -176,7 +176,9 @@ def spread(spark, df):
     import os  # noqa: PLC0415
 
     chunk = int(os.environ.get("SPARK_GRAFT_SPREAD_CHUNK_KB", "128")) * 1024
-    if key:  # no file list (non-file source) -> keep the cores-wide target
+    # a file list caps the target at one partition per chunk of input; a
+    # non-file source (no file list) keeps the cores-wide target
+    if key:
         try:
             total = sum(
                 os.path.getsize(p.removeprefix("file:")) for p in key

@@ -1967,6 +1967,9 @@ def translate_phoenix_sql(
     ``str_columns``: names of string-typed columns — enables the
     NULL-as-empty ``||`` rewrite (StringConcatExpression skips null
     children; Spark's concat propagates NULL).
+    ``float_columns``: names of FLOAT-typed columns — enables the
+    float-precision comparison rewrite (a comparison literal coerces to the
+    column type in the dialect; see ``_rewrite_float_literal_cmp``).
     """
     # Reassemble with rewrites applied to code segments only.  Function calls
     # may span literal boundaries (an argument IS a literal), so rather than

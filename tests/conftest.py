@@ -8,8 +8,9 @@ import pytest
 SF_TEST_DIR = os.environ.get("PHOENIX_SPARK_TEST_SF", "/root/testdata/sf0.001")
 
 # The FAST test set (run by default — see pytest.ini): full oracle parity
-# for every registered query, the 100 TB plan-contract sweep, and the
-# Arrow-kernel equivalence pins.  Everything else (the IT-replay suites,
+# for every registered query, the 100 TB plan-contract sweep, the
+# Arrow-kernel equivalence pins, and the typed-column lookup behind
+# Engine.sql's dialect rewrites.  Everything else (the IT-replay suites,
 # engine/property/streaming tests) is marked slow and runs via
 # `pytest tests/ -m "" -q`.
 _FAST_FILES = {
@@ -18,6 +19,7 @@ _FAST_FILES = {
     "test_text_kernel.py",
     "test_shingle_kernel.py",
     "test_cosine_kernel.py",
+    "test_typed_columns.py",
 }
 
 

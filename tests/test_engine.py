@@ -554,21 +554,6 @@ def test_rvc_pagination_partitions_table(spark):
     assert len(set(seen)) == total  # no row visited twice
 
 
-def test_ts_columns_scoped_to_referenced_tables(spark):
-    from phoenix_spark.engine import Engine
-
-    e = Engine(spark, SF_TEST_DIR)
-    # orders is not referenced → its o_orderdate must not be rewritten
-    assert "o_orderdate" not in e._ts_columns_for("SELECT l_quantity FROM lineitem")
-    assert "o_orderdate" in e._ts_columns_for(
-        "SELECT o_orderdate - 3 FROM orders"
-    )
-    # a numeric column sharing a ts column's NAME in another, unreferenced
-    # table stays untouched: only referenced tables contribute ts columns
-    cols = e._ts_columns_for("SELECT ts FROM events")
-    assert "ts" in cols and "o_orderdate" not in cols
-
-
 # ---------------------------------------------------------------------------
 # Secondary indexes (CreateIndexCompiler / IndexMaintainer / QueryOptimizer
 # analogues — reference behavior: GlobalIndexOptimizationIT.java)
