@@ -87,8 +87,11 @@ class _CpuProbe:
     bench_history row now ALSO records the summed executor CPU of the
     stages each query's timed triplet ran (additions-only; all reads happen
     BETWEEN queries, never inside a timed region).  Degrades to None when
-    the UI endpoint is unavailable.
+    the UI endpoint is unavailable or stops answering (every request has a
+    timeout, so a wedged endpoint cannot hang the run).
     """
+
+    _TIMEOUT_S = 10
 
     def __init__(self, spark) -> None:
         import urllib.request  # noqa: PLC0415
@@ -98,7 +101,9 @@ class _CpuProbe:
         try:
             url = spark.sparkContext.uiWebUrl
             if url:
-                with self._req.urlopen(f"{url}/api/v1/applications") as r:
+                with self._req.urlopen(
+                    f"{url}/api/v1/applications", timeout=self._TIMEOUT_S
+                ) as r:
                     app = json.loads(r.read())[0]["id"]
                 self.base = f"{url}/api/v1/applications/{app}/stages"
         except Exception:
@@ -110,7 +115,9 @@ class _CpuProbe:
         # (stages can still be finalizing right after an action returns)
         prev = -1
         for _ in range(4):
-            with self._req.urlopen(f"{self.base}?status=complete") as r:
+            with self._req.urlopen(
+                f"{self.base}?status=complete", timeout=self._TIMEOUT_S
+            ) as r:
                 out = {s["stageId"]: s for s in json.loads(r.read())}
             if len(out) == prev:
                 break

@@ -21,7 +21,6 @@ no-concurrent-writers scope).
 
 from __future__ import annotations
 
-import json
 import os
 import re
 
@@ -30,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from phoenix_spark import ddl as D
 from phoenix_spark import indexes as IX
 from phoenix_spark.catalog import Catalog
+from phoenix_spark.metastore import Metastore, View
 from phoenix_spark.mutations import ManagedTable
 from phoenix_spark.sqlfront import classify, translate_phoenix_sql
 
@@ -56,42 +56,10 @@ class Engine:
             os.environ.get("PHOENIX_SPARK_WAREHOUSE", "/tmp/phoenix_spark_wh")
         )
         os.makedirs(self.warehouse, exist_ok=True)
-        # views persist in the warehouse (SYSTEM.CATALOG analogue): a view is
-        # (parent, stored predicate, view-defined columns), recompiled into
-        # every read; older warehouses stored 2-tuples — normalize on load
-        self._views_path = os.path.join(self.warehouse, "_views.json")
-        self._views: dict[str, tuple[str, str | None, dict[str, str]]] = {}
-        if os.path.exists(self._views_path):
-            with open(self._views_path) as f:
-                self._views = {
-                    k: (v[0], v[1], v[2] if len(v) > 2 else {})
-                    for k, v in json.load(f).items()
-                }
-        # Tenant-owned views (CREATE VIEW through a tenant connection) are
-        # scoped to that tenant — other connections get the reference's
-        # TableNotFoundException (TenantSpecificTablesDMLIT
-        # .testTenantTableCannotBeUsedInStatementsInNonMultitenantConnections)
-        self._view_owners_path = os.path.join(self.warehouse, "_view_owners.json")
-        self._view_owners: dict[str, str] = {}
-        if os.path.exists(self._view_owners_path):
-            with open(self._view_owners_path) as f:
-                self._view_owners = json.load(f)
-        self._seq_path = os.path.join(self.warehouse, "_sequences.json")
-        # secondary indexes (SYSTEM.CATALOG's PTableType.INDEX rows analogue)
-        self._indexes_path = os.path.join(self.warehouse, "_indexes.json")
-        self._indexes: dict[str, "IX.IndexDef"] = {}
-        if os.path.exists(self._indexes_path):
-            with open(self._indexes_path) as f:
-                self._indexes = {
-                    k: IX.IndexDef.from_json(v) for k, v in json.load(f).items()
-                }
+        # the catalog documents (views, indexes, CDCs, sequences, tasks);
+        # connections derived from this one share the same object
+        self.metastore = Metastore(self.warehouse)
         self._cursors: dict[str, dict] = {}
-        # CDC objects (CREATE CDC, grammar :593-616): name -> (table, scope)
-        self._cdcs_path = os.path.join(self.warehouse, "_cdcs.json")
-        self._cdcs: dict[str, tuple[str, str]] = {}
-        if os.path.exists(self._cdcs_path):
-            with open(self._cdcs_path) as f:
-                self._cdcs = {k: tuple(v) for k, v in json.load(f).items()}
         self.default_schema: str | None = None
         # Tenant-specific connection (PTable.isMultiTenant, PTable.java:915):
         # the first PK column of a MULTI_TENANT table is the tenant id; a
@@ -115,27 +83,22 @@ class Engine:
         if sf_dir is not None:
             self.attach(sf_dir)
 
+    def _connection(self, tenant_id: str | None, scn: int | None) -> "Engine":
+        """Another connection over this warehouse, sharing this engine's
+        catalog and metastore."""
+        e = Engine(self.spark, warehouse=self.warehouse, tenant_id=tenant_id, scn=scn)
+        e.catalog = self.catalog
+        e.metastore = self.metastore
+        return e
+
     def with_tenant(self, tenant_id: str) -> "Engine":
         """A tenant-scoped connection sharing this engine's warehouse."""
-        e = Engine(self.spark, warehouse=self.warehouse, tenant_id=tenant_id)
-        e.catalog = self.catalog
-        e._views = self._views
-        e._view_owners = self._view_owners
-        return e
+        return self._connection(tenant_id, None)
 
     def with_scn(self, scn: int) -> "Engine":
         """A point-in-time connection (CurrentSCN): reads resolve AS OF the
         given commit timestamp; mutations are rejected."""
-        e = Engine(
-            self.spark,
-            warehouse=self.warehouse,
-            tenant_id=self.tenant_id,
-            scn=scn,
-        )
-        e.catalog = self.catalog
-        e._views = self._views
-        e._view_owners = self._view_owners
-        return e
+        return self._connection(self.tenant_id, scn)
 
     def _check_mutable(self) -> None:
         """A CurrentSCN connection is read-only (SQLExceptionCode
@@ -180,14 +143,14 @@ class Engine:
         column (schema-on-read).
         """
         name = self._qualify(name)
-        if name in self._views:
-            owner = self._view_owners.get(name)
-            if owner is not None and owner != self.tenant_id:
+        view = self.metastore.views.get(name)
+        if view is not None:
+            parent, where, vcols, owner = view
+            if owner not in (None, self.tenant_id):
                 # tenant-owned view on a foreign/global connection:
                 # TableNotFoundException (MetaDataClient resolves tenant
                 # views only under their tenant)
                 raise ValueError(f"Table undefined. tableName={name}")
-            parent, where, vcols = self._views[name]
             # view-defined columns resolve like dynamic columns: typed reads
             # from the parent's JSON overflow column (the reference stores
             # view columns as ordinary cells of the same physical table; the
@@ -273,13 +236,10 @@ class Engine:
         to refresh the SHARED bare temp views: the temp-view namespace is
         session-global, so its bare names always hold the UNSCOPED state;
         tenant/SCN connections resolve through per-connection suffixed
-        snapshot views instead (_rewrite_tenant_refs / _rewrite_scn_refs)."""
+        snapshot views instead (_rewrite_scoped_refs)."""
         if self.tenant_id is None and self.scn is None:
             return self
-        e = Engine(self.spark, warehouse=self.warehouse)
-        e.catalog = self.catalog
-        e._views = self._views
-        e._view_owners = self._view_owners
+        e = self._connection(None, None)
         e._registered = self._registered
         return e
 
@@ -293,38 +253,29 @@ class Engine:
         mt = ManagedTable(self.spark, self.warehouse, qname)
         if mt.exists():
             self._registered_segments[bare.lower()] = (mt, mt._segments())
-        owner = self._view_owners.get(qname)
-        if owner is None:
-            self._unscoped().table(name).createOrReplaceTempView(bare)
-            self._registered.add(bare)
-        elif owner == self.tenant_id:
-            # tenant-owned view: only its owner can resolve it; register the
-            # scoped frame (foreign connections are rejected before lookup)
-            self.table(name).createOrReplaceTempView(bare)
-            self._registered.add(bare)
+        view = self.metastore.views.get(qname)
+        targets = [(name, view.owner if view else None)]
         # Views recompile their predicate over the CURRENT base state
         # (QueryCompiler.java:803-806) — but a Spark temp view pins the
         # segment list that existed when it was registered, so re-register
         # every view whose chain bottoms out at this table or the temp view
         # would keep serving the pre-mutation snapshot.
-        base = bare.lower()
-        for vname in self._views:
-            if vname == name:
+        targets += [
+            (v, self.metastore.views[v].owner)
+            for v in self.metastore.views_over(bare, self._qualify)
+            if v != name
+        ]
+        for n, owner in targets:
+            if owner is None:
+                self._unscoped().table(n).createOrReplaceTempView(n.split(".")[-1])
+            elif owner == self.tenant_id:
+                # tenant-owned view: only its owner can resolve it; register
+                # the scoped frame (foreign connections are rejected before
+                # lookup)
+                self.table(n).createOrReplaceTempView(n.split(".")[-1])
+            else:
                 continue
-            vowner = self._view_owners.get(vname)
-            node = vname
-            while node in self._views:
-                node = self._views[node][0]
-            if node.split(".")[-1].lower() != base:
-                continue
-            if vowner is None:
-                self._unscoped().table(vname).createOrReplaceTempView(
-                    vname.split(".")[-1]
-                )
-                self._registered.add(vname.split(".")[-1])
-            elif vowner == self.tenant_id:
-                self.table(vname).createOrReplaceTempView(vname.split(".")[-1])
-                self._registered.add(vname.split(".")[-1])
+            self._registered.add(n.split(".")[-1])
 
     def _refresh_compacted(self, text: str) -> None:
         """Re-register every managed table the statement references (also
@@ -332,11 +283,9 @@ class Engine:
         registered: ``ManagedTable.compact()`` and TRUNCATE delete the
         segment files that view still reads."""
         tokens = {m.lower() for m in re.findall(r"[A-Za-z_]\w*", text)}
-        for vname in self._views:
+        for vname in self.metastore.views:
             if vname.split(".")[-1] in tokens:
-                node = vname
-                while node in self._views:
-                    node = self._views[node][0]
+                node, _ = self.metastore.view_chain(vname, self._qualify)
                 tokens.add(node.split(".")[-1].lower())
         for bare, (mt, segs) in list(self._registered_segments.items()):
             if bare not in tokens:
@@ -393,31 +342,6 @@ class Engine:
 
     # -- sequences (SequenceRegionObserver analogue) -----------------------
 
-    def _sequences(self) -> dict:
-        if os.path.exists(self._seq_path):
-            with open(self._seq_path) as f:
-                return json.load(f)
-        return {}
-
-    def _save_sequences(self, seqs: dict) -> None:
-        with open(self._seq_path, "w") as f:
-            json.dump(seqs, f)
-
-    # -- SYSTEM.TASK store (PTable.TaskType; Task.java) --------------------
-
-    def _tasks(self) -> list[dict]:
-        path = os.path.join(self.warehouse, "_tasks.json")
-        if os.path.exists(path):
-            with open(path) as f:
-                return json.load(f)
-        return []
-
-    def _add_task(self, **task) -> None:
-        tasks = self._tasks()
-        tasks.append(task)
-        with open(os.path.join(self.warehouse, "_tasks.json"), "w") as f:
-            json.dump(tasks, f, indent=1)
-
     _LONG_MIN, _LONG_MAX = -(2**63), 2**63 - 1
 
     def create_sequence(
@@ -441,7 +365,7 @@ class Engine:
         directly at the server value (SequenceBulkAllocationIT
         .testNextValuesForSequenceWithPreviouslyAllocatedValues: after two
         NEXT VALUEs under CACHE 100, the bulk block starts at 101)."""
-        seqs = self._sequences()
+        seqs = self.metastore.sequences()
         if name in seqs:
             if if_not_exists:
                 return
@@ -456,7 +380,7 @@ class Engine:
             "cycle": cycle,
             "cache": cache,
         }
-        self._save_sequences(seqs)
+        self.metastore.save_sequences(seqs)
 
     def next_value_block(self, name: str, n: int, per_row: int = 1) -> int:
         """Reserve ``n × per_row`` sequence values; returns the first.
@@ -477,7 +401,7 @@ class Engine:
         SELECT) drain the cache contiguously into a fresh reservation —
         contiguity holds because the server value always sits one increment
         past the cached block's end."""
-        seqs = self._sequences()
+        seqs = self.metastore.sequences()
         if name not in seqs:
             raise ValueError(f"no sequence {name}")
         s = seqs[name]
@@ -546,14 +470,14 @@ class Engine:
             s["next"] = cur + total * inc
             s["cached_next"] = None
         s["last"] = last
-        self._save_sequences(seqs)
+        self.metastore.save_sequences(seqs)
         return cur
 
     def current_value(self, name: str) -> int:
         """CURRENT VALUE FOR: the value last dispensed — after a bulk
         allocation, the LAST value of the reserved block
         (SequenceBulkAllocationIT.assertExpectedCurrentValueForSequence)."""
-        seqs = self._sequences()
+        seqs = self.metastore.sequences()
         s = seqs[name]
         if s.get("last") is None:
             # CANNOT_CALL_CURRENT_BEFORE_NEXT_VALUE (SQLExceptionCode)
@@ -685,12 +609,12 @@ class Engine:
     def _exec_select(self, text: str, consume_sequences: bool = True) -> DataFrame:
         # tenant-owned views resolve only under their tenant — the shared
         # temp-view namespace would otherwise leak them to every connection
-        for vname, owner in self._view_owners.items():
-            if owner != self.tenant_id and re.search(
+        for vname, v in self.metastore.views.items():
+            if v.owner not in (None, self.tenant_id) and re.search(
                 rf"\b{re.escape(vname.split('.')[-1])}\b", text, re.I
             ):
                 raise ValueError(f"Table undefined. tableName={vname}")
-        if self._cdcs:
+        if self.metastore.cdcs:
             self._register_cdc_views(text)
         self._refresh_compacted(text)
         masked, unmask = self._mask_literals(text)
@@ -701,10 +625,8 @@ class Engine:
         from phoenix_spark.sqlfront import _rewrite_aliased_table_qualifiers
 
         masked = _rewrite_aliased_table_qualifiers(masked)
-        if self.scn is not None:
-            masked = self._rewrite_scn_refs(masked)
-        elif self.tenant_id is not None:
-            masked = self._rewrite_tenant_refs(masked)
+        if self.scn is not None or self.tenant_id is not None:
+            masked = self._rewrite_scoped_refs(masked)
         masked = self._rewrite_distinct_orderby(masked)
         masked = self._rewrite_rvc_offset(masked, unmask)
         masked = self._rewrite_dynamic_cols(masked)
@@ -785,7 +707,9 @@ class Engine:
 
         text = self._SYSTEM_REF_RE.sub(_sys, text)
         dotted = [n for n in self._managed_names() if "." in n]
-        dotted += [v for v in self._views if "." in v and v not in dotted]
+        dotted += [
+            v for v in self.metastore.views if "." in v and v not in dotted
+        ]
         for name in sorted(dotted, key=len, reverse=True):
             bare = name.split(".")[-1]
             pat = r"\b" + re.escape(name) + r"\b"
@@ -796,72 +720,55 @@ class Engine:
             text = new
         return text
 
+    # FROM/JOIN <table> [[AS] alias]: the references _rewrite_scoped_refs
+    # swaps (an alias never starts with a clause keyword)
     _SCN_ALIAS_KW = (
         "ON|WHERE|JOIN|GROUP|ORDER|LIMIT|OFFSET|FETCH|HAVING|UNION|"
         "INTERSECT|EXCEPT|LEFT|RIGHT|INNER|CROSS|FULL|NATURAL|USING|SET|VALUES"
     )
+    _FROM_REF_RE = re.compile(
+        r"\b(FROM|JOIN)\s+([A-Za-z_]\w*)"
+        rf"(?:\s+(?:AS\s+)?(?!(?:{_SCN_ALIAS_KW})\b)([A-Za-z_]\w*))?",
+        re.I,
+    )
 
-    def _rewrite_scn_refs(self, masked: str) -> str:
-        """Point-in-time connections (CurrentSCN) cannot resolve through the
-        shared current-state temp views — swap each managed-table reference
-        for a per-SCN snapshot view (``t`` → ``t__scn<N> t``), registered
-        from this connection's AS-OF read.  Snapshot views are immutable, so
-        registration is idempotent and cache-friendly."""
-        names = {n.split(".")[-1].lower() for n in self._managed_names()}
-        pat = re.compile(
-            r"\b(FROM|JOIN)\s+([A-Za-z_]\w*)"
-            rf"(?:\s+(?:AS\s+)?(?!(?:{self._SCN_ALIAS_KW})\b)([A-Za-z_]\w*))?",
-            re.I,
-        )
-
-        def sub(m: "re.Match[str]") -> str:
-            kw, tbl, alias = m.group(1), m.group(2), m.group(3)
-            bare = tbl.lower()
-            if bare not in names:
-                return m.group(0)
-            view = f"{bare}__scn{self.scn}"
-            if view not in self._registered:
-                self.table(bare).createOrReplaceTempView(view)
-                self._registered.add(view)
-            # keep qualified references (t.col) resolving when no alias
-            return f"{kw} {view} {alias or bare}"
-
-        return pat.sub(sub, masked)
-
-    def _rewrite_tenant_refs(self, masked: str) -> str:
-        """Tenant connections resolve managed tables/views through
-        per-tenant scoped temp views (``t`` → ``t__tn<hash> t``) — the
-        shared bare temp views always hold the UNSCOPED state (see
-        _register), so resolving them here would leak other tenants' rows
-        and expose the tenant column.  Registration is per-SELECT: the
-        scoped frame recompiles over the current base segments, so reads
-        see every connection's committed mutations."""
+    def _rewrite_scoped_refs(self, masked: str) -> str:
+        """Point-in-time (CurrentSCN) and tenant connections cannot resolve
+        through the shared bare temp views, which always hold the current
+        UNSCOPED state (see _register): resolving them would read the wrong
+        snapshot, or leak other tenants' rows and the tenant column.  Swap
+        each managed-table reference — on a tenant connection also each view
+        it may see — for a per-connection view (``t`` → ``t__scn<N> t`` /
+        ``t__tn<hash> t``) registered from this connection's own read.
+        AS-OF snapshots are immutable, so they register once; tenant views
+        re-register per SELECT over the current base segments, so reads see
+        every connection's committed mutations."""
         import hashlib
 
-        tag = hashlib.md5(self.tenant_id.encode()).hexdigest()[:8]
         known = {n.split(".")[-1].lower() for n in self._managed_names()}
-        known |= {
-            v.split(".")[-1].lower()
-            for v in self._views
-            if self._view_owners.get(v) in (None, self.tenant_id)
-        }
-        pat = re.compile(
-            r"\b(FROM|JOIN)\s+([A-Za-z_]\w*)"
-            rf"(?:\s+(?:AS\s+)?(?!(?:{self._SCN_ALIAS_KW})\b)([A-Za-z_]\w*))?",
-            re.I,
-        )
+        if self.scn is not None:
+            suffix = f"__scn{self.scn}"
+        else:
+            suffix = "__tn" + hashlib.md5(self.tenant_id.encode()).hexdigest()[:8]
+            known |= {
+                k.split(".")[-1].lower()
+                for k, v in self.metastore.views.items()
+                if v.owner in (None, self.tenant_id)
+            }
 
         def sub(m: "re.Match[str]") -> str:
             kw, tbl, alias = m.group(1), m.group(2), m.group(3)
             bare = tbl.lower()
             if bare not in known:
                 return m.group(0)
-            view = f"{bare}__tn{tag}"
-            self.table(bare).createOrReplaceTempView(view)
-            self._registered.add(view)
+            view = bare + suffix
+            if self.scn is None or view not in self._registered:
+                self.table(bare).createOrReplaceTempView(view)
+                self._registered.add(view)
+            # keep qualified references (t.col) resolving when no alias
             return f"{kw} {view} {alias or bare}"
 
-        return pat.sub(sub, masked)
+        return self._FROM_REF_RE.sub(sub, masked)
 
     # OFFSET (pk1, pk2, ...) = (v1, v2, ...) — the RVC OFFSET pagination
     # form (RVCOffsetCompiler.java; QueryMoreIT
@@ -1074,7 +981,7 @@ class Engine:
             )
         if not refs:
             return text
-        seqs = self._sequences()
+        seqs = self.metastore.sequences()
         for name, _k in refs:
             if name not in seqs:
                 raise ValueError(f"no sequence {name}")
@@ -1214,7 +1121,8 @@ class Engine:
         read path), and neither do SCN connections (the index table's commit
         timeline is independent of the base's — resolving the base AS OF its
         own timeline is always correct)."""
-        if not self._indexes or self.tenant_id is not None or self.scn is not None:
+        scoped = self.tenant_id is not None or self.scn is not None
+        if scoped or not self.metastore.indexes:
             return text
         no_index, forced = IX.parse_index_hint(text)
         if no_index:
@@ -1240,7 +1148,7 @@ class Engine:
                 return self._index_base(table)[0].pk
 
         active = {
-            k: d for k, d in self._indexes.items() if d.state == "ACTIVE"
+            k: d for k, d in self.metastore.indexes.items() if d.state == "ACTIVE"
         }
         if forced:
             # INDEX(t ix...) restricts each hinted table to the named indexes
@@ -1382,40 +1290,27 @@ class Engine:
         self._register(name)
         return 0
 
-    def _save_views(self) -> None:
-        with open(self._views_path, "w") as f:
-            json.dump({k: list(v) for k, v in self._views.items()}, f)
-
     def _exec_create_view(self, text: str) -> int:
         cv = D.parse_create_view(text)
-        if self.tenant_id is not None:
+        base, chain = self.metastore.view_chain(cv.parent, self._qualify)
+        try:
+            base_mt = self.managed(base)
+        except ValueError:
+            base_mt = None
+        if self.tenant_id is not None and (
+            base_mt is None or self._tenant_col(base_mt) is None
+        ):
             # a tenant connection resolves only MULTI_TENANT bases
             # (TenantSpecificTablesDDLIT.testCreateTenantViewFromNonMultiTenant
             # -> TableNotFoundException)
-            node = self._qualify(cv.parent)
-            while node in self._views:
-                node = self._qualify(self._views[node][0])
-            try:
-                base_mt0 = self.managed(node)
-            except ValueError:
-                base_mt0 = None
-            if base_mt0 is None or self._tenant_col(base_mt0) is None:
-                raise ValueError(f"Table undefined. tableName={cv.parent}")
+            raise ValueError(f"Table undefined. tableName={cv.parent}")
         if cv.columns:
             # a view column may not shadow a parent column
             # (ColumnAlreadyExistsException; TenantSpecificTablesDDLIT
             # .testTenantSpecificTableCannotOverrideParentCol)
-            node = self._qualify(cv.parent)
-            parent_cols: set[str] = set()
-            while node in self._views:
-                parent_cols |= {c.lower() for c in (self._views[node][2] or {})}
-                node = self._qualify(self._views[node][0])
-            try:
-                parent_cols |= {
-                    f.lower() for f in self.managed(node).schema.fieldNames()
-                }
-            except ValueError:
-                pass
+            parent_cols = {c.lower() for v in chain for c in v.columns}
+            if base_mt is not None:
+                parent_cols |= {f.lower() for f in base_mt.schema.fieldNames()}
             clash = [
                 c for c in cv.columns if c.lower() in parent_cols
             ]
@@ -1424,7 +1319,7 @@ class Engine:
                     f"column(s) {sorted(clash)} already exist on the parent "
                     f"of view {cv.name}"
                 )
-        if cv.name in self._views:
+        if cv.name in self.metastore.views:
             # MetaDataClient.createTable: TABLE_ALREADY_EXIST unless IF NOT
             # EXISTS (a view is a catalog row of the same namespace)
             if cv.if_not_exists:
@@ -1435,32 +1330,23 @@ class Engine:
             # column (the reference writes them as ordinary cells of the same
             # physical HBase table — any row can grow cells; here the base
             # grows the overflow column once, metadata-only)
-            node = cv.parent
-            while self._qualify(node) in self._views:
-                node = self._views[self._qualify(node)][0]
-            base_mt = self.managed(node)
+            base_mt = base_mt or self.managed(base)  # raises: no base table
             if "props" not in base_mt.schema.fieldNames():
                 from pyspark.sql import types as T
 
-                meta = base_mt.meta
-                schema = T.StructType.fromJson(meta["schema"]).add(
-                    "props", T.StringType()
-                )
-                meta["schema"] = schema.jsonValue()
                 # HIDDEN: the base's declared columns must not change when a
                 # view adds columns — the overflow is dropped from default
                 # projections (see table())
-                meta["props"]["HIDDEN_OVERFLOW"] = True
-                with open(base_mt.meta_path, "w") as f:
-                    json.dump(meta, f, indent=1)
+                base_mt.alter(
+                    schema=base_mt.schema.add("props", T.StringType()),
+                    props={"HIDDEN_OVERFLOW": True},
+                )
                 self._register(base_mt.name)
-        self._views[cv.name] = (cv.parent, cv.where, cv.columns or {})
-        if self.tenant_id is not None:
-            # a view created through a tenant connection is tenant-owned
-            self._view_owners[cv.name] = self.tenant_id
-            with open(self._view_owners_path, "w") as f:
-                json.dump(self._view_owners, f)
-        self._save_views()
+        # a view created through a tenant connection is tenant-owned
+        self.metastore.views[cv.name] = View(
+            cv.parent, cv.where, cv.columns or {}, self.tenant_id
+        )
+        self.metastore.save_views()
         self._register(cv.name)
         return 0
 
@@ -1713,18 +1599,14 @@ class Engine:
             )
         # CHANGE is the superset row shape; PRE/POST narrow the image columns
         scope = "CHANGE" if "CHANGE" in scopes or len(scopes) == 2 else next(iter(scopes))
-        if name in self._cdcs:
+        if name in self.metastore.cdcs:
             if if_not_exists:
                 return 0
             raise ValueError(f"CDC {name} already exists")
         self.managed(table)  # validate target now, loudly
-        self._cdcs[name] = (table, scope)
-        self._save_cdcs()
+        self.metastore.cdcs[name] = (table, scope)
+        self.metastore.save_cdcs()
         return 0
-
-    def _save_cdcs(self) -> None:
-        with open(self._cdcs_path, "w") as f:
-            json.dump(self._cdcs, f, indent=1)
 
     def _register_cdc_views(self, text: str) -> None:
         """Re-register any CDC objects referenced by ``text`` as temp views
@@ -1747,7 +1629,7 @@ class Engine:
             if hm
             else None
         )
-        for name, (table, scope) in self._cdcs.items():
+        for name, (table, scope) in self.metastore.cdcs.items():
             if not re.search(rf"\b{re.escape(name)}\b", text, re.IGNORECASE):
                 continue
             scopes = hint_scopes if hint_scopes is not None else (
@@ -1817,7 +1699,7 @@ class Engine:
         segments are written sorted by the index key (WRITE_SORT), read-path
         substituted by _exec_select when it covers a query."""
         d, if_not_exists = IX.parse_create_index(text)
-        if d.name in self._indexes:
+        if d.name in self.metastore.indexes:
             if if_not_exists:
                 return 0
             raise ValueError(f"index {d.name} already exists")
@@ -1862,18 +1744,14 @@ class Engine:
         if d.where is not None:
             build = build.filter(self._translate_pred(d.where, d.table))
         imt.upsert_df(build.select(*cols))
-        self._indexes[d.name] = d
-        self._save_indexes()
+        self.metastore.indexes[d.name] = d
+        self.metastore.save_indexes()
         self._register(d.name)
         return 0
 
-    def _save_indexes(self) -> None:
-        with open(self._indexes_path, "w") as f:
-            json.dump({k: v.to_json() for k, v in self._indexes.items()}, f, indent=1)
-
     def _drop_index(self, name: str) -> None:
-        self._indexes.pop(name, None)
-        self._save_indexes()
+        self.metastore.indexes.pop(name, None)
+        self.metastore.save_indexes()
         ManagedTable(self.spark, self.warehouse, name).drop()
         self.spark.catalog.dropTempView(name)
         self._registered.discard(name)
@@ -1883,40 +1761,29 @@ class Engine:
 
         ``chain`` is ``None`` for a plain table; for a VIEW (the reference's
         view indexes — MetaDataClient.createIndex accepts views, see IT
-        add_view_index.sql) it is the view chain base-outward as
-        ``[(where, vcols), ...]`` to replay over any base frame."""
-        q = self._qualify(table)
-        vname = None
-        if q in self._views:
-            vname = q
-        else:
-            cands = [
-                v for v in self._views if v.split(".")[-1] == table.lower()
-            ]
-            if len(cands) == 1:
-                vname = cands[0]
-        if vname is None:
-            return self.managed(table), None
-        chain = []
-        node = vname
-        while node in self._views:
-            parent, where, vcols = self._views[node]
-            chain.append((where, vcols))
-            node = parent if parent in self._views else self._qualify(parent)
-        chain.reverse()
-        return self.managed(node), chain
+        add_view_index.sql) it is the view chain base-outward (``View``
+        records, see Metastore.view_chain) to replay over any base frame."""
+        views = self.metastore.views
+        vname = self._qualify(table)
+        if vname not in views:
+            cands = [v for v in views if v.split(".")[-1] == table.lower()]
+            if len(cands) != 1:
+                return self.managed(table), None
+            vname = cands[0]
+        base, chain = self.metastore.view_chain(vname, self._qualify)
+        return self.managed(base), chain
 
     def _apply_view_chain(
-        self, df: DataFrame, chain: list, json_col: str = "props"
+        self, df: DataFrame, chain: list[View], json_col: str = "props"
     ) -> DataFrame:
         """Replay a view chain over ``df`` — same semantics as table():
         each view's added columns resolve from the JSON overflow column
         (NULL when the base has none), then its predicate filters."""
         from phoenix_spark.types import parse_type
 
-        for where, vcols in chain:
+        for v in chain:
             excluded = []
-            for col, typ in (vcols or {}).items():
+            for col, typ in v.columns.items():
                 if typ is None:  # diverged view: parent column excluded
                     excluded.append(col)
                     continue
@@ -1926,8 +1793,8 @@ class Engine:
                     else F.lit(None)
                 )
                 df = df.withColumn(col, src.cast(parse_type(typ)))
-            if where:
-                df = df.filter(where)
+            if v.where:
+                df = df.filter(v.where)
             if excluded:
                 df = df.drop(*excluded)
         return df
@@ -1939,7 +1806,7 @@ class Engine:
         semi-joins of the touched-PK set — never a full index rewrite."""
         table = table.split(".")[-1].lower()
         work: list[tuple["IX.IndexDef", list | None]] = []
-        for d in self._indexes.values():
+        for d in self.metastore.indexes.values():
             if d.state == "DISABLED":
                 continue
             if d.table == table:
@@ -2028,9 +1895,9 @@ class Engine:
         )
         if dm:
             name = dm.group(2).lower()
-            if self._cdcs.pop(name, None) is None and not dm.group(1):
+            if self.metastore.cdcs.pop(name, None) is None and not dm.group(1):
                 raise ValueError(f"no CDC {name}")
-            self._save_cdcs()
+            self.metastore.save_cdcs()
             return 0
         sm = re.match(
             r"^\s*DROP\s+SCHEMA\s+(?:IF\s+(EXISTS)\s+)?([\w\"]+)\s*;?\s*$",
@@ -2057,7 +1924,7 @@ class Engine:
         di = IX.parse_drop_index(text)
         if di is not None:
             name, _table, if_exists = di
-            if name not in self._indexes:
+            if name not in self.metastore.indexes:
                 if if_exists:
                     return 0
                 raise ValueError(f"no index {name}")
@@ -2065,20 +1932,17 @@ class Engine:
             return 0
         dr = D.parse_drop(text)
         if dr.kind == "sequence":
-            seqs = self._sequences()
+            seqs = self.metastore.sequences()
             if dr.name in seqs:
                 del seqs[dr.name]
-                self._save_sequences(seqs)
+                self.metastore.save_sequences(seqs)
             elif not dr.if_exists:
                 raise ValueError(f"no sequence {dr.name}")
             return 0
         if dr.kind == "view":
-            if self._view_owners.pop(dr.name, None) is not None:
-                with open(self._view_owners_path, "w") as f:
-                    json.dump(self._view_owners, f)
-            if self._views.pop(dr.name, None) is None and not dr.if_exists:
+            if self.metastore.views.pop(dr.name, None) is None and not dr.if_exists:
                 raise ValueError(f"no view {dr.name}")
-            self._save_views()
+            self.metastore.save_views()
             self.spark.catalog.dropTempView(dr.name)
             return 0
         mt = ManagedTable(self.spark, self.warehouse, self._qualify(dr.name))
@@ -2094,14 +1958,7 @@ class Engine:
             raise ValueError(f"Table undefined. tableName={dr.name}")
         # child views block a plain DROP TABLE; CASCADE drops them too
         # (MetaDataClient.dropTable: CANNOT_MUTATE_TABLE unless cascade)
-        base = dr.name.split(".")[-1].lower()
-        child_views = []
-        for v in self._views:  # whole chains: a view-of-a-view goes too
-            node = v
-            while node in self._views:
-                node = self._views[node][0]
-            if node.split(".")[-1].lower() == base:
-                child_views.append(v)
+        child_views = self.metastore.views_over(dr.name, self._qualify)
         if child_views and not dr.truncate:
             if not dr.cascade:
                 raise ValueError(
@@ -2114,19 +1971,19 @@ class Engine:
             view_leaves = {v.split(".")[-1].lower() for v in child_views}
             view_indexes = [
                 d.name
-                for d in self._indexes.values()
+                for d in self.metastore.indexes.values()
                 if d.table.split(".")[-1].lower() in view_leaves
             ]
             for v in child_views:
-                self._views.pop(v, None)
+                self.metastore.views.pop(v, None)
                 self.spark.catalog.dropTempView(v.split(".")[-1])
                 self._registered.discard(v.split(".")[-1])
-            self._save_views()
+            self.metastore.save_views()
             for ix in view_indexes:
                 self._drop_index(ix)
         dependent = [
             d.name
-            for d in self._indexes.values()
+            for d in self.metastore.indexes.values()
             if d.table == dr.name.split(".")[-1].lower()
         ]
         if dr.truncate:
@@ -2165,7 +2022,7 @@ class Engine:
                 am.group(3),
                 am.group(4).upper(),
             )
-            d = self._indexes.get(iname)
+            d = self.metastore.indexes.get(iname)
             if d is None:
                 if if_exists:
                     return 0
@@ -2200,7 +2057,7 @@ class Engine:
                     # this engine rebuilds inline, so the task row lands
                     # COMPLETED — the observable catalog state once the
                     # reference's background rebuild finishes)
-                    self._add_task(
+                    self.metastore.add_task(
                         type=2,
                         table=d.table,
                         ts=start,
@@ -2208,7 +2065,7 @@ class Engine:
                         status="COMPLETED",
                         data=f"INDEX_REBUILD {d.name}",
                     )
-            self._save_indexes()
+            self.metastore.save_indexes()
             return 0
         m = re.match(
             r"^\s*ALTER\s+(TABLE|VIEW)\s+([\w.]+)\s+(ADD|DROP|SET)\s+"
@@ -2220,15 +2077,15 @@ class Engine:
             raise ValueError(f"unparseable ALTER TABLE: {text[:120]!r}")
         what = m.group(1).upper()
         name, op, rest = m.group(2).lower(), m.group(3).upper(), m.group(4)
-        if what == "VIEW" or self._qualify(name) in self._views:
+        vname = self._qualify(name)
+        view = self.metastore.views.get(vname)
+        if what == "VIEW" or view is not None:
             # ALTER VIEW v ADD/DROP column (grammar :774-778 accepts VIEW):
             # view-defined columns live in the view metadata; parent columns
             # cannot be dropped through a view (MetaDataClient rejects too)
-            vname = self._qualify(name)
-            if vname not in self._views:
+            if view is None:
                 raise ValueError(f"no view {name}")
-            parent, where, vcols = self._views[vname]
-            vcols = dict(vcols)
+            vcols = dict(view.columns)
             if op == "ADD":
                 col, typ = rest.split(None, 1)
                 vcols[col.strip('"').lower()] = re.sub(
@@ -2245,15 +2102,15 @@ class Engine:
                     # a None-typed entry marks the exclusion here.  PK
                     # columns can never be dropped (MetaDataClient rejects:
                     # the row key is the physical row identity).
-                    if col not in {c.lower() for c in self.table(parent).columns}:
+                    if col not in {
+                        c.lower() for c in self.table(view.parent).columns
+                    }:
                         raise ValueError(
                             f"cannot drop {col} through view {name}: "
                             "no such column"
                         )
-                    node = parent
-                    while node in self._views:
-                        node = self._views[node][0]
-                    if col in self.managed(node).pk:
+                    base, _ = self.metastore.view_chain(vname, self._qualify)
+                    if col in self.managed(base).pk:
                         raise ValueError(
                             f"cannot drop PK column {col} through view "
                             f"{name}: the row key is the row identity"
@@ -2261,26 +2118,24 @@ class Engine:
                     vcols[col] = None
             else:
                 raise ValueError("ALTER VIEW supports ADD/DROP COLUMN only")
-            self._views[vname] = (parent, where, vcols)
-            self._save_views()
+            self.metastore.views[vname] = view._replace(columns=vcols)
+            self.metastore.save_views()
             self._register(vname)
             return 0
         mt = self.managed(name)
         if op == "SET":
             # ALTER TABLE t SET k=v, ... (fam_properties): metadata-only
-            meta = mt.meta
+            props = {}
             for item in D._split_top(rest):
                 k, _, v = item.partition("=")
                 if not _:
                     raise ValueError(f"bad table property {item!r}")
-                meta.setdefault("props", {})[k.strip().upper()] = v.strip().strip("'")
-            with open(mt.meta_path, "w") as f:
-                json.dump(meta, f, indent=1)
+                props[k.strip().upper()] = v.strip().strip("'")
+            mt.alter(props=props)
             return 0
-        meta = mt.meta
         from pyspark.sql import types as T
 
-        schema = T.StructType.fromJson(meta["schema"])
+        schema = mt.schema
         if op == "ADD":
             from phoenix_spark.types import parse_type
 
@@ -2292,9 +2147,7 @@ class Engine:
             if col in mt.pk:
                 raise ValueError("cannot drop a PK column")
             schema = T.StructType([f for f in schema.fields if f.name != col])
-        meta["schema"] = schema.jsonValue()
-        with open(mt.meta_path, "w") as f:
-            json.dump(meta, f, indent=1)
+        mt.alter(schema=schema)
         self._register(name)
         return 0
 
@@ -2312,13 +2165,13 @@ class Engine:
                 [(name, ddl)], "table: string, create_statement: string"
             )
         if "SEQUENCE" in up:
-            rows = [(k,) for k in sorted(self._sequences())]
+            rows = [(k,) for k in sorted(self.metastore.sequences())]
             return self.spark.createDataFrame(rows or [("",)], "sequence_name: string")
         names = set()
         if self.catalog is not None:
             names |= set(self.catalog.tables)
         names |= set(self._managed_names())
-        names |= set(self._views)
+        names |= set(self.metastore.views)
         return self.spark.createDataFrame(
             [(n,) for n in sorted(names)], "table_name: string"
         )
@@ -2390,10 +2243,7 @@ class Engine:
             "row_count": mt.read().count(),
             "n_segments": len(mt._segments()),
         }
-        meta = mt.meta
-        meta["stats"] = stats
-        with open(mt.meta_path, "w") as f:
-            json.dump(meta, f, indent=1)
+        mt.alter(stats=stats)
         return stats
 
     def _exec_update_stats(self, text: str) -> int:
@@ -2412,15 +2262,14 @@ class Engine:
         Returns None if ``name`` is not a view; raises if the view is
         read-only (any non-equality predicate)."""
         name = self._qualify(name)
-        if name not in self._views:
+        view = self.metastore.views.get(name)
+        if view is None:
             return None
-        owner = self._view_owners.get(name)
-        if owner is not None and owner != self.tenant_id:
+        if view.owner not in (None, self.tenant_id):
             raise ValueError(f"Table undefined. tableName={name}")
         consts: dict[str, object] = {}
-        node = name
-        while node in self._views:
-            parent, where = self._views[node][:2]
+        base, chain = self.metastore.view_chain(name, self._qualify)
+        for where in (v.where for v in reversed(chain)):  # outermost first
             if where:
                 # conjunct analysis runs on literal-MASKED text (r04
                 # advice): a constant like 'rock AND roll' or 'a<b' must
@@ -2443,8 +2292,7 @@ class Engine:
                     consts.setdefault(
                         col, self._eval_literal(unmask(m.group(2)))
                     )
-            node = parent
-        return node, consts
+        return base, consts
 
     def _exec_upsert(self, text: str) -> DataFrame | int:
         self._check_mutable()
@@ -2543,11 +2391,12 @@ class Engine:
             # view-added columns, view chain order (needed for the implicit
             # column list below and for overflow routing later)
             vcols: dict[str, str | None] = {}
-            node = self._qualify(up.table)
-            while node in self._views:
-                for cname, ctype in (self._views[node][2] or {}).items():
+            _, chain = self.metastore.view_chain(
+                self._qualify(up.table), self._qualify
+            )
+            for v in reversed(chain):  # outermost first
+                for cname, ctype in v.columns.items():
                     vcols.setdefault(cname, ctype)
-                node = self._views[node][0]
             # Implicit column list = the VIEW's columns: parent columns in
             # declared order (minus the hidden overflow and, on a tenant
             # connection, the tenant column) INCLUDING view constants (a
@@ -2958,17 +2807,15 @@ class Engine:
     def _exec_delete(self, text: str) -> DataFrame | int:
         self._check_mutable()
         dl = D.parse_delete(text)
-        if self._qualify(dl.table) in self._views:
+        if self._qualify(dl.table) in self.metastore.views:
             # DELETE through an updatable view: scope the delete to the
             # view's predicate chain on the base table (DeleteCompiler over
             # ViewType.UPDATABLE)
             self._view_constants(dl.table)  # raises if the view is read-only
-            node, preds = self._qualify(dl.table), []
-            while node in self._views:
-                parent, where = self._views[node][:2]
-                if where:
-                    preds.append(f"({where})")
-                node = parent
+            node, chain = self.metastore.view_chain(
+                self._qualify(dl.table), self._qualify
+            )
+            preds = [f"({v.where})" for v in reversed(chain) if v.where]
             if dl.where:
                 preds.append(f"({dl.where})")
             dl = D.Delete(
@@ -2990,7 +2837,8 @@ class Engine:
         cond = translate_phoenix_sql(dl.where) if dl.where else None
         order = translate_phoenix_sql(dl.order_by) if dl.order_by else None
         has_idx = any(
-            d.table == dl.table.split(".")[-1].lower() for d in self._indexes.values()
+            d.table == dl.table.split(".")[-1].lower()
+            for d in self.metastore.indexes.values()
         )
         victims = None
         if dl.returning or has_idx:

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from phoenix_spark.metastore import write_json
+
 _TS_COL = "_mutation_ts"
 _DEL_COL = "_deleted"
 _SEG_RE = re.compile(r"seg-(\d{12})-")
@@ -96,8 +98,7 @@ class ManagedTable:
             # fall back to treating every PK column as required)
             "not_null": not_null,
         }
-        with open(tbl.meta_path, "w") as f:
-            json.dump(meta, f, indent=1)
+        tbl._save_meta(meta)
         return tbl
 
     def drop(self) -> None:
@@ -117,6 +118,25 @@ class ManagedTable:
     def meta(self) -> dict:
         with open(self.meta_path) as f:
             return json.load(f)
+
+    def _save_meta(self, meta: dict) -> None:
+        write_json(self.meta_path, meta)
+
+    def alter(
+        self,
+        schema: T.StructType | None = None,
+        props: dict | None = None,
+        stats: dict | None = None,
+    ) -> None:
+        """Metadata-only change (ALTER TABLE, UPDATE STATISTICS): a new
+        schema, ``props`` merged into the table properties, fresh stats."""
+        meta = self.meta
+        if schema is not None:
+            meta["schema"] = schema.jsonValue()
+        meta.setdefault("props", {}).update(props or {})
+        if stats is not None:
+            meta["stats"] = stats
+        self._save_meta(meta)
 
     @property
     def schema(self) -> T.StructType:

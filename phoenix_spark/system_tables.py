@@ -7,12 +7,12 @@ shipped IT scripts read ``SELECT VIEW_INDEX_ID FROM SYSTEM.CATALOG ...``
 (phoenix-core/src/it/resources/sql_files/query_view_index.sql) and
 ``SELECT TASK_TYPE, ... FROM SYSTEM.TASK`` (query_index_rebuild_async.sql).
 
-This engine's catalog is the warehouse metadata (meta.json per managed
-table, ``_views.json``, ``_indexes.json``, ``_sequences.json``); these
-builders project it into DataFrames with the reference's column names so
-those queries run unchanged.  The frames are tiny (one row per
-table/column) and built driver-side on demand — metadata scale, never
-data scale.
+This engine's catalog is the warehouse metadata documents (listed in
+``metastore.py``, which owns them); these builders read them through the
+engine's ``Metastore`` and project them into DataFrames with the
+reference's column names so those queries run unchanged.  The frames are
+tiny (one row per table/column) and built driver-side on demand —
+metadata scale, never data scale.
 
 Column subset per table (names follow PhoenixDatabaseMetaData):
 
@@ -171,7 +171,8 @@ def catalog_df(engine) -> DataFrame:
 
     from phoenix_spark.mutations import ManagedTable
 
-    index_names = set(engine._indexes)
+    ms = engine.metastore
+    index_names = set(ms.indexes)
     for name in sorted(engine._managed_names()):
         if name.split(".")[-1] in index_names:
             continue  # emitted below with index metadata
@@ -181,20 +182,20 @@ def catalog_df(engine) -> DataFrame:
     # view-index ids: the reference assigns a short id per index on a view
     # (MetaDataUtil.getViewIndexIdDataType); dense 1-based by name here
     view_ix_id = 0
-    for name, d in sorted(engine._indexes.items()):
+    for name, d in sorted(ms.indexes.items()):
         imt = ManagedTable(engine.spark, engine.warehouse, name)
         # the index lives in its base's schema (MetaDataClient puts the
         # index row under the data table's TABLE_SCHEM)
         target = engine._qualify(d.table)
         if "." not in target:
-            vc = [v for v in engine._views if v.split(".")[-1] == d.table]
+            vc = [v for v in ms.views if v.split(".")[-1] == d.table]
             mc = [
                 n
                 for n in engine._managed_names()
                 if n.split(".")[-1] == d.table
             ]
             target = vc[0] if len(vc) == 1 else (mc[0] if len(mc) == 1 else target)
-        on_view = target in engine._views
+        on_view = target in ms.views
         if on_view:
             view_ix_id += 1
         schem = target.split(".")[0] if "." in target else None
@@ -208,7 +209,7 @@ def catalog_df(engine) -> DataFrame:
             view_index_id=view_ix_id if on_view else None,
         )
 
-    for vname, (parent, where, vcols) in sorted(engine._views.items()):
+    for vname, (parent, where, vcols, _owner) in sorted(ms.views.items()):
         stmt = f"SELECT * FROM {parent.upper()}" + (
             f" WHERE {where}" if where else ""
         )
@@ -243,7 +244,7 @@ _SEQUENCE_SCHEMA = (
 
 def sequence_df(engine) -> DataFrame:
     rows = []
-    for name, s in sorted(engine._sequences().items()):
+    for name, s in sorted(engine.metastore.sequences().items()):
         schem, seq = _split(name)
         rows.append(
             (
@@ -287,7 +288,7 @@ def task_df(engine) -> DataFrame:
     import datetime as _dt
 
     rows = []
-    for t in engine._tasks():
+    for t in engine.metastore.tasks():
         schem, tbl = _split(t["table"])
         ts = _dt.datetime.fromisoformat(t["ts"])
         end = _dt.datetime.fromisoformat(t["end_ts"]) if t.get("end_ts") else None

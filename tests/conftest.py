@@ -9,10 +9,10 @@ SF_TEST_DIR = os.environ.get("PHOENIX_SPARK_TEST_SF", "/root/testdata/sf0.001")
 
 # The FAST test set (run by default — see pytest.ini): full oracle parity
 # for every registered query, the 100 TB plan-contract sweep, the
-# Arrow-kernel equivalence pins, and the typed-column lookup behind
-# Engine.sql's dialect rewrites.  Everything else (the IT-replay suites,
-# engine/property/streaming tests) is marked slow and runs via
-# `pytest tests/ -m "" -q`.
+# Arrow-kernel equivalence pins, the typed-column lookup behind
+# Engine.sql's dialect rewrites, and the warehouse catalog (metastore).
+# Everything else (the IT-replay suites, engine/property/streaming tests)
+# is marked slow and runs via `pytest tests/ -m "" -q`.
 _FAST_FILES = {
     "test_oracle_parity.py",
     "test_plans.py",
@@ -20,6 +20,7 @@ _FAST_FILES = {
     "test_shingle_kernel.py",
     "test_cosine_kernel.py",
     "test_typed_columns.py",
+    "test_metastore.py",
 }
 
 

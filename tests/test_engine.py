@@ -622,11 +622,11 @@ def test_index_maintained_on_upsert_and_delete(ixengine):
 def test_index_dropped_with_table_and_explicitly(ixengine):
     e = ixengine
     e.sql("DROP INDEX ix_a ON ixt")
-    assert "ix_a" not in e._indexes
+    assert "ix_a" not in e.metastore.indexes
     assert not _reads_index(e.sql("SELECT a, b FROM ixt WHERE a = 'F'"), "ix_a")
     e.sql("CREATE INDEX ix_a2 ON ixt (a)")
     e.sql("DROP TABLE ixt")
-    assert "ix_a2" not in e._indexes  # cascade
+    assert "ix_a2" not in e.metastore.indexes  # cascade
 
 
 def test_functional_index_literal_exprs_rejected_loudly(engine):
@@ -1542,8 +1542,8 @@ def test_drop_table_cascade_views(engine):
     engine.sql("DROP TABLE casc CASCADE")
     with _pt.raises(ValueError):
         engine.managed("casc")
-    assert "casc_v" not in engine._views and "casc_vv" not in engine._views
-    assert "casc_vix" not in engine._indexes
+    assert not {"casc_v", "casc_vv"} & set(engine.metastore.views)
+    assert "casc_vix" not in engine.metastore.indexes
 
 
 def test_view_constant_apostrophe_and_keyword_literal(engine):
